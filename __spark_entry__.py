@@ -151,21 +151,13 @@ def _extract_from_pagexml(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tiny fixture table: size partitions to the data (24 rows across 32
     # near-empty tasks would just churn python workers in the two extra
     # UDF stages this round-trip adds)
-    from table_recognition_spark.pipeline.flagship import N_MEDIA
-
     media = fixture_media(spark).coalesce(4)
     xml_media = media.select(
         "media_ref", "width", "height",
         serialize_page_xml_col(F.col("ocr_lines")).alias("page_xml"),
     )
     parsed = parse_page_xml_table(xml_media, "page_xml", "ocr_lines")
-    # explicit kernel fan-out = the known fixture size: the adaptive
-    # bound would otherwise count `parsed`, re-running the XML
-    # serialize+parse UDF chain once just to learn it is 24 rows
-    return extract_flat(
-        interleaved_docs(spark, sf_dir), parsed, _weights(),
-        kernel_partitions=N_MEDIA,
-    )
+    return extract_flat(interleaved_docs(spark, sf_dir), parsed, _weights())
 
 
 def _extract_from_pagexml_files(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -201,19 +193,13 @@ def _extract_from_pagexml_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         with open(os.path.join(d, f"{r.media_ref}.xml"), "w") as fh:
             fh.write(xml)
-    from table_recognition_spark.pipeline.flagship import N_MEDIA
-
     register_pagexml_source(spark)
     parsed = (
         spark.read.format("pagexml")
         .option("numPartitions", "4")
         .load(d)
     )
-    # explicit fan-out = the staged corpus size (see _extract_from_pagexml)
-    return extract_flat(
-        interleaved_docs(spark, sf_dir), parsed, _weights(),
-        kernel_partitions=N_MEDIA,
-    )
+    return extract_flat(interleaved_docs(spark, sf_dir), parsed, _weights())
 
 
 def _pipeline_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:

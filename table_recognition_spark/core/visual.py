@@ -347,9 +347,9 @@ def forward(
 
     ``node_feats``/``edge_feats``: precomputed CNN features (256-d per
     crop) — when given, the crop arguments are ignored and the CNN stage
-    is skipped. This is the cross-image fusion seam: a task holding many
-    images runs ONE batched CNN over all their crops (bit-identical to
-    per-image, GEMM rows are independent) and feeds the slices here."""
+    is skipped, so a caller can run (and time) the CNN on its own, or
+    batch it across images: ``_cnn_forward`` is bit-identical per image
+    whatever the batch, because GEMM rows are independent."""
     x_geo = np.asarray(x_geo, dtype=np.float32)
     e_geo = np.asarray(edge_attr, dtype=np.float32)
     if edge_index.size:

@@ -75,82 +75,6 @@ def run_kernel_arrays(
     return assemble.assemble_cells(edges, edge_cls, bboxes, texts)
 
 
-def run_kernel_arrays_many(
-    images: list,
-    strategy: str = "knn",
-    visual_weights: dict | None = None,
-) -> list:
-    """Visual-model kernel over MANY images with the CNN feature
-    extraction fused across them: one im2col/GEMM chain per CNN for the
-    whole batch instead of one per image (small per-image crop batches
-    under-utilize the GEMM; at corpus scale a task holds many images).
-
-    ``images``: list of (bboxes (n,4) int64, texts, width, height,
-    image_bytes) tuples, each row already in line_id order. Returns one
-    cell-text list per input image.
-
-    Bit-identity with the per-image path (``run_kernel_arrays`` with
-    model='visual') holds because every fused op is row-independent:
-    GEMM output rows don't depend on the batch's other rows (pinned by
-    tests/test_visual.py), and depthwise/pool/avg are elementwise per
-    sample. The no-Spark oracle stays per-image; span parity between the
-    two is exercised by the pipeline parity tests."""
-    from ..core import visual
-    from ..core.blas import limit_blas_threads
-    from ..operators.multimodal import decode_image_visual
-
-    limit_blas_threads(1)
-    if visual_weights is None:
-        visual_weights = visual.default_weights()
-
-    per_img = []  # (bboxes, texts, edges, x, e, n_nodes, n_edges)
-    node_crops_all, edge_crops_all = [], []
-    for bboxes, texts, width, height, image in images:
-        if len(bboxes) == 0:
-            per_img.append(None)
-            continue
-        edges = EDGE_STRATEGIES[strategy](bboxes, width, height)
-        x = geometry.node_features(bboxes, width, height)
-        e = geometry.edge_features(edges, bboxes, width, height)
-        img = decode_image_visual(bytes(image))
-        nc, ec = visual.crop_regions(img, bboxes, edges)
-        node_crops_all.append(nc)
-        edge_crops_all.append(ec)
-        per_img.append((bboxes, texts, edges, x, e, len(nc), len(ec)))
-
-    if not node_crops_all:
-        return [[] for _ in images]
-    nv_all = visual._cnn_forward(
-        np.concatenate(node_crops_all), visual_weights,
-        "g3.node_cnn", visual.NODE_CNN,
-    )
-    ec_cat = np.concatenate(edge_crops_all)
-    if len(ec_cat):
-        ev_all = visual._cnn_forward(
-            ec_cat, visual_weights, "g3.edge_cnn", visual.EDGE_CNN,
-        )
-    else:
-        ev_all = np.zeros((0, 256), dtype=np.float32)
-
-    out, n_off, e_off = [], 0, 0
-    for item in per_img:
-        if item is None:
-            out.append([])
-            continue
-        bboxes, texts, edges, x, e, n_n, n_e = item
-        nv = nv_all[n_off : n_off + n_n]
-        ev = ev_all[e_off : e_off + n_e]
-        n_off += n_n
-        e_off += n_e
-        node_lp, edge_lp = visual.forward(
-            x, edges, e, None, None, visual_weights,
-            node_feats=nv, edge_feats=ev,
-        )
-        _, edge_cls = gnn.decode(node_lp, edge_lp)
-        out.append(assemble.assemble_cells(edges, edge_cls, bboxes, texts))
-    return out
-
-
 def run_kernel(
     ocr_lines: list,
     width: int,

@@ -6,7 +6,7 @@ Spark shape (SURVEY.md §3.1):
                            └── media spans ─┐                              │
     media ──(ocr_lines,w,h only; image      │ distinct(media_ref)          │
              bytes PRUNED from the scan) ───┴── join ── repartition ──     │
-                 mapInPandas(GNN kernel, Arrow batches) ── cells ──        │
+                 mapInArrow(GNN kernel, Arrow batches) ── cells ──         │
                  join back to span occurrences ────────────────────────────┤
                                                                            ▼
             groupBy(doc_id) → collect_list → array_sort → re-number offsets
@@ -18,7 +18,7 @@ Scale properties, deliberately:
 - **Column pruning**: the kernel needs only (ocr_lines, width, height); the
   potentially-huge ``image`` binary column never leaves the scan unless the
   caller asks for visual features.
-- **Only Python boundary** is the Arrow-batched ``mapInPandas`` kernel (and
+- **Only Python boundary** is the Arrow-batched ``mapInArrow`` kernel (and
   optionally a pandas_udf text strip); boilerplate strip defaults to
   JVM-side ``regexp_replace`` inside whole-stage codegen.
 - **One shuffle** for reassembly (groupBy doc_id); offsets are re-numbered
@@ -47,42 +47,45 @@ CELLS_SCHEMA = T.StructType(
 
 OUT_SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
 
-# per-worker weights cache: npz parse once per executor process, not per batch
+# per-worker weights cache: each artifact (145 KB G2, 59 MB G3) is parsed
+# from the broadcast bytes once per Python worker, not per batch. Keyed by
+# the artifact's CONTENT digest (computed driver-side, shipped in the task
+# closure), so a long-lived worker parses it once across every query
+# invocation that uses the same weights; keying by the Broadcast object's
+# id() made each run's fresh broadcast a miss (~0.6 s × workers per run).
 _WEIGHTS_CACHE: dict = {}
 
-
-# per-worker G3 weights cache: the ~15M-param artifact is parsed from the
-# broadcast bytes once per executor process, not per batch. Keyed by the
-# artifact's CONTENT digest (computed driver-side, shipped in the task
-# closure): a long-lived python worker then parses the 59 MB npz exactly
-# once across every query invocation that uses the same weights — keying
-# by the Broadcast object's id() (the round-4 shape) made each run's
-# fresh broadcast a cache miss, re-paying ~0.6 s × workers per run.
-_G3_CACHE: dict = {}
-
-# driver-side broadcast cache: one torrent distribution per
-# (SparkContext, weights-content) — repeated query invocations (and
-# bench repeats) reuse the live broadcast instead of re-shipping the
-# artifact (59 MB for G3, 145 KB for G2 — the latter used to ride the
-# task closure, i.e. ~37 MB of per-task IPC at 256 kernel tasks).
-# Holds a ref to the weights dict so an id() key can't be recycled.
+# driver-side broadcast cache: {(id(sc), content digest): (sc, wdict, bc)},
+# one live broadcast per (SparkContext, weights content), so repeated
+# query invocations reuse it instead of re-shipping the artifact. Equal
+# content passed as a fresh dict shares the entry (and replaces the pinned
+# dict); pinning sc keeps its id() from being recycled, and entries of a
+# stopped context are dropped.
 _BC_CACHE: dict = {}
 
 
 def _broadcast_weights(sc, wdict: dict):
-    """(broadcast, content-digest) for a weights dict, cached per
-    (SparkContext, dict identity) so repeated invocations reuse one
-    live broadcast and one serialization."""
-    key = (id(sc), id(wdict))
-    hit = _BC_CACHE.get(key)
-    if hit is None:
-        wbytes = weights_to_bytes(wdict)
-        digest = hashlib.md5(wbytes).hexdigest()
-        bc = sc.broadcast(wbytes)
-        _BC_CACHE[key] = (wdict, digest, bc)
-        return bc, digest
-    _ref, digest, bc = hit
+    """(broadcast, content-digest) for a weights dict. The dict last seen
+    with its content is an identity hit (no re-serialization of the 59 MB
+    G3 artifact); another dict is serialized once to find its digest."""
+    for key, (bc_sc, ref, bc) in list(_BC_CACHE.items()):
+        if bc_sc._jsc is None:
+            del _BC_CACHE[key]
+        elif bc_sc is sc and ref is wdict:
+            return bc, key[1]
+    wbytes = weights_to_bytes(wdict)
+    digest = hashlib.md5(wbytes).hexdigest()
+    hit = _BC_CACHE.get((id(sc), digest))
+    bc = hit[2] if hit else sc.broadcast(wbytes)
+    _BC_CACHE[(id(sc), digest)] = (sc, wdict, bc)
     return bc, digest
+
+
+def _cached_weights(bc, digest: str) -> dict:
+    w = _WEIGHTS_CACHE.get(digest)
+    if w is None:
+        w = _WEIGHTS_CACHE[digest] = weights_from_bytes(bc.value)
+    return w
 
 
 def _kernel_fn(
@@ -102,6 +105,11 @@ def _kernel_fn(
     the dict materialization contended so badly it ran 3.7× SLOWER than
     at 8 workers — measured 6.7 s → 24.7 s for the same input.)
 
+    Each image then goes through ``oracle.extract.run_kernel_arrays``,
+    the oracle's own per-image kernel, for both models: Spark/oracle
+    parity holds by construction, and a task's memory stays one image's
+    crops however many images the task holds.
+
     Both weights artifacts arrive via ``sparkContext.broadcast`` (one
     copy per executor, fetched once) — never the task closure, which is
     re-shipped to the Python worker on EVERY task — and the parsed
@@ -113,16 +121,10 @@ def _kernel_fn(
         from ..oracle.extract import run_kernel_arrays
 
         limit_blas_threads(1)
-        w = _WEIGHTS_CACHE.get(w_digest)
-        if w is None:
-            w = weights_from_bytes(weights_bc.value)
-            _WEIGHTS_CACHE[w_digest] = w
+        w = _cached_weights(weights_bc, w_digest)
         vw = None
         if model == "visual":
-            vw = _G3_CACHE.get(g3_digest)
-            if vw is None:
-                vw = weights_from_bytes(g3_weights_bc.value)
-                _G3_CACHE[g3_digest] = vw
+            vw = _cached_weights(g3_weights_bc, g3_digest)
 
         for rb in batches:
             refs = rb.column(rb.schema.get_field_index("media_ref")).to_pylist()
@@ -166,57 +168,26 @@ def _kernel_fn(
                 bboxes_all = np.empty((0, 4), dtype=np.int64)
 
             out_refs, out_idxs, out_texts = [], [], []
-            if model == "visual":
-                # cross-image fusion: ONE batched CNN over every crop in
-                # the record batch (run_kernel_arrays_many) instead of a
-                # small under-utilized GEMM chain per image — the shape
-                # that matters when a task holds many images
-                from ..oracle.extract import run_kernel_arrays_many
-
-                keep, inputs = [], []
-                for r in range(len(refs)):
-                    lo, hi = int(row_off[r]), int(row_off[r + 1])
-                    if hi <= lo:
-                        continue
-                    order = np.argsort(line_ids[lo:hi], kind="stable") + lo
-                    keep.append(r)
-                    inputs.append(
-                        (
-                            bboxes_all[order],
-                            [texts_all[j] for j in order],
-                            int(widths[r]),
-                            int(heights[r]),
-                            images[r],
-                        )
-                    )
-                for r, cells in zip(
-                    keep,
-                    run_kernel_arrays_many(inputs, strategy, vw),
-                ):
-                    for i, cell_text in enumerate(cells):
-                        out_refs.append(refs[r])
-                        out_idxs.append(i)
-                        out_texts.append(cell_text)
-            else:
-                for r in range(len(refs)):
-                    lo, hi = int(row_off[r]), int(row_off[r + 1])
-                    if hi <= lo:
-                        continue
-                    order = np.argsort(line_ids[lo:hi], kind="stable") + lo
-                    b = bboxes_all[order]
-                    t = [texts_all[j] for j in order]
-                    cells = run_kernel_arrays(
-                        b,
-                        t,
-                        int(widths[r]),
-                        int(heights[r]),
-                        w,
-                        strategy,
-                    )
-                    for i, cell_text in enumerate(cells):
-                        out_refs.append(refs[r])
-                        out_idxs.append(i)
-                        out_texts.append(cell_text)
+            for r in range(len(refs)):
+                lo, hi = int(row_off[r]), int(row_off[r + 1])
+                if hi <= lo:
+                    continue
+                order = np.argsort(line_ids[lo:hi], kind="stable") + lo
+                cells = run_kernel_arrays(
+                    bboxes_all[order],
+                    [texts_all[j] for j in order],
+                    int(widths[r]),
+                    int(heights[r]),
+                    w,
+                    strategy,
+                    model=model,
+                    image=images[r] if images is not None else None,
+                    visual_weights=vw,
+                )
+                for i, cell_text in enumerate(cells):
+                    out_refs.append(refs[r])
+                    out_idxs.append(i)
+                    out_texts.append(cell_text)
             yield pa.RecordBatch.from_pydict(
                 {
                     "media_ref": pa.array(out_refs, pa.string()),
@@ -244,28 +215,27 @@ def recognize_tables(
     resolves its weights driver-side via ``visual.default_weights()``
     (the committed trained artifact when present, else seeded init —
     the same resolver the no-Spark oracle uses, so parity holds by
-    construction); the artifact ships to executors in the task closure
-    like the G2 weights."""
+    construction); the artifact ships to executors as a broadcast like
+    the G2 weights.
+
+    ``kernel_partitions`` defaults to ``defaultParallelism``, capped by
+    ``n_rows_bound`` (a known upper bound on the input row count) when
+    the caller has one."""
     cols = ["media_ref", "ocr_lines", "width", "height"]
     if model == "visual":
         cols.append("image")
     cols = media_df.select(*cols)
     if kernel_partitions is None:
-        # 8× cores: per-image kernel cost varies ~3× with image size, so
-        # exactly-#cores partitions leave a straggler tail (measured 84%
-        # CPU utilization at 16 cores with 4×); finer tasks let the
-        # scheduler level the tail. The 8× target is additionally capped
-        # by the input ROW COUNT when the caller supplies the bound
-        # (n_rows_bound): every mapInArrow task pays a fixed Python
-        # boundary cost (~8 ms — worker handshake + per-task closure
-        # ship), so tasks beyond one-row-each are pure overhead — the
-        # r7 profile measured the 24-image flagship kernel at 2.30 s
-        # with 256 tasks vs 0.39 s with 24 (identity function: 2.29 s,
-        # i.e. all boundary). At scale the bound exceeds 8× cores and
-        # behavior is unchanged.
-        kernel_partitions = (
-            media_df.sparkSession.sparkContext.defaultParallelism * 8
-        )
+        # one task per core: every Python task costs ~250 ms of worker CPU
+        # whatever its data. Almost all of it is pyspark's per-task
+        # setup_spark_files → importlib.invalidate_caches(), which re-reads
+        # pyspark.zip's directory once per zipimporter the worker holds
+        # (cProfile of a reused worker running a trivial mapInArrow UDF:
+        # 24 tasks cost 6.1-6.6 worker CPU-s, 4 tasks 1.0). More tasks per
+        # core would level the ~3× per-image cost spread, but each costs
+        # more than the tail it saves; round-robin partitions already give
+        # every task an equal image count.
+        kernel_partitions = media_df.sparkSession.sparkContext.defaultParallelism
         if n_rows_bound is not None:
             kernel_partitions = max(1, min(kernel_partitions, n_rows_bound))
     if kernel_partitions:
@@ -342,20 +312,8 @@ def _all_spans(
     if model == "visual":
         media_cols.append("image")
     kernel_input = refs.join(media_df.select(*media_cols), "media_ref")
-    # scale-adaptive kernel task count: the media table's row count is a
-    # cheap upper bound on |distinct refs| (a metadata-fast parquet
-    # count for every call site), so a small media corpus never fans
-    # out into hundreds of near-empty Python-boundary tasks while a
-    # large one keeps the full 8×cores straggler-leveling fan-out
-    n_bound = None
-    if kernel_partitions is None:
-        try:
-            n_bound = media_df.count()
-        except Exception:
-            n_bound = None
     cells = recognize_tables(
-        kernel_input, weights, kernel_partitions, strategy, model, g3_weights,
-        n_rows_bound=n_bound,
+        kernel_input, weights, kernel_partitions, strategy, model, g3_weights
     )
     if broadcast_cells:
         cells = F.broadcast(cells)

@@ -65,24 +65,21 @@ def test_forward_shapes_and_determinism():
     assert np.allclose(np.exp(a[1]).sum(axis=1), 1.0, atol=1e-4)
 
 
-@pytest.mark.spark
-@pytest.mark.slow
-def test_pipeline_parity_visual(spark, weights):
-    from table_recognition_spark.fixtures.generate import (
-        corpus_to_spark,
-        make_corpus,
-    )
+def _visual_parity(spark, weights, docs, media, **kwargs):
+    """Spark visual-model spans == the no-Spark oracle's; returns them."""
+    from table_recognition_spark.fixtures.generate import corpus_to_spark
     from table_recognition_spark.oracle.extract import extract_corpus
     from table_recognition_spark.pipeline.extract import extract
 
-    docs, media, _ = make_corpus(4, 2, seed=13)
     docs_df, media_df = corpus_to_spark(spark, docs, media)
     got = {
         r["doc_id"]: [
             (s["kind"], s["text"], s["media_ref"], s["offset"])
             for s in r["spans"]
         ]
-        for r in extract(docs_df, media_df, weights, model="visual").collect()
+        for r in extract(
+            docs_df, media_df, weights, model="visual", **kwargs
+        ).collect()
     }
     # same resolver the Spark kernel uses (trained artifact when
     # present, else seeded init) — parity must hold for whichever the
@@ -95,6 +92,32 @@ def test_pipeline_parity_visual(spark, weights):
         ).items()
     }
     assert got == exp
+    return got
+
+
+@pytest.mark.spark
+@pytest.mark.slow
+def test_pipeline_parity_visual(spark, weights):
+    from table_recognition_spark.fixtures.generate import make_corpus
+
+    docs, media, _ = make_corpus(4, 2, seed=13)
+    _visual_parity(spark, weights, docs, media)
+
+
+@pytest.mark.spark
+@pytest.mark.slow
+def test_visual_parity_single_kernel_task(spark, weights):
+    """kernel_partitions=1: one task holds every image, several per Arrow
+    batch, including a row with no OCR lines, and still matches the
+    per-image oracle span for span."""
+    from table_recognition_spark.fixtures.generate import make_corpus
+
+    # skew_doc: doc 0 references every image
+    docs, media, _ = make_corpus(6, 5, seed=13, skew_doc=True)
+    media[2] = dict(media[2], ocr_lines=[])
+    got = _visual_parity(spark, weights, docs, media, kernel_partitions=1)
+    refs = {s[2] for spans in got.values() for s in spans if s[0] == "cell"}
+    assert len(refs) == 4 and media[2]["media_ref"] not in refs
 
 
 def test_crop_regions_color_input():
@@ -196,11 +219,11 @@ def test_visual_path_ingests_color_jpeg_media(spark, weights):
 
 
 def test_fused_cnn_bit_identical_to_per_image():
-    """Cross-image CNN fusion (run_kernel_arrays_many / forward's
-    node_feats seam) must be BIT-identical to the per-image path: GEMM
-    output rows are independent of the batch's other rows, depthwise/
-    pool/avg are elementwise per sample. Span parity between the fused
-    Spark kernel and the per-image no-Spark oracle rests on this."""
+    """A CNN batch over several images' crops (forward's node_feats
+    seam) must be BIT-identical to the per-image path: GEMM output rows
+    are independent of the batch's other rows, depthwise/pool/avg are
+    elementwise per sample. The layer timings that run the CNN batched
+    per task rest on this."""
     rng = np.random.default_rng(11)
     vw = visual.default_weights()
     e_sizes = [98, 55, 17, 210]
@@ -225,39 +248,3 @@ def test_fused_cnn_bit_identical_to_per_image():
             per = visual._cnn_forward(c, vw, prefix, spec)
             assert np.array_equal(fused[off : off + len(c)], per)
             off += len(c)
-
-
-def test_run_kernel_arrays_many_matches_per_image():
-    """The fused many-image kernel returns exactly the per-image
-    kernel's cells for every image, including empty-bbox rows."""
-    from table_recognition_spark.fixtures.generate import _make_table_image
-    from table_recognition_spark.oracle.extract import (
-        polygons_to_bboxes,
-        run_kernel_arrays,
-        run_kernel_arrays_many,
-    )
-
-    vw = visual.default_weights()
-    inputs = []
-    for seed in (3, 5):
-        rng = np.random.default_rng([42, seed])
-        m, _ = _make_table_image(rng, f"fuse{seed}")
-        lines = sorted(m["ocr_lines"], key=lambda d: d["line_id"])
-        bboxes = polygons_to_bboxes(
-            [[(p["x"], p["y"]) for p in li["points"]] for li in lines]
-        )
-        inputs.append(
-            (bboxes, [li["text"] for li in lines], m["width"],
-             m["height"], m["image"])
-        )
-    inputs.insert(1, (np.empty((0, 4), dtype=np.int64), [], 10, 10, b""))
-    fused = run_kernel_arrays_many(inputs, "knn", vw)
-    assert fused[1] == []
-    for inp, cells in zip(inputs, fused):
-        if len(inp[0]) == 0:
-            continue
-        exp = run_kernel_arrays(
-            inp[0], inp[1], inp[2], inp[3], None, "knn",
-            model="visual", image=inp[4], visual_weights=vw,
-        )
-        assert cells == exp and len(cells) > 0
